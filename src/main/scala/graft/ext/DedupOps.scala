@@ -693,22 +693,114 @@ object DedupOps {
   }
 
   // ------------------------------------------------------------------
-  // Shared set-grain machinery for the exact pair joins
+  // Exact set-similarity joins: one AllPairs/PPJoin core, two measures
   // ------------------------------------------------------------------
 
-  /** Shard size for the dense all-pairs cores
-    * ([[bitmaskJaccardSetPairs]] / [[bitmaskContainmentSetPairs]]):
+  /** The measure of an exact set-similarity pair join
+    * ([[setSimilarityPairs]], [[blockedSetSimilarityPairs]]) over
+    * distinct hashed-token sets. A measure supplies only what differs
+    * between measures: its score columns, the size bound its
+    * threshold implies, and whether it is symmetric. Token prep,
+    * core dispatch, verification, 6-dp rounding and member expansion
+    * are shared. A pair is kept when ANY of its rounded scores
+    * reaches `threshold`; threshold 0 applies no filter at all, so
+    * empty-set pairs keep their null score (the blocked tier's
+    * unthresholded posture). */
+  sealed trait SetMeasure {
+    def threshold: Double
+
+    /** Output score columns, in output order. */
+    def names: Seq[String]
+
+    /** Each score is |A∩B| over one of these, computed from `i` =
+      * |A∩B| and the two set sizes — size arithmetic, no union array
+      * is ever built. */
+    protected def denominators(i: Column, na: Column,
+                               nb: Column): Seq[Column]
+
+    /** score(A, B) = score(B, A). Then a pair's scores do not swap
+      * when it renormalizes to id_a < id_b, and the threshold bounds
+      * BOTH sides' overlap, so prefix-against-prefix candidates are
+      * complete. An asymmetric measure bounds only its denominator
+      * side, whose prefix must probe every set's FULL postings. */
+    def symmetric: Boolean
+
+    /** A size condition every qualifying pair meets when A is the
+      * prefix-bounded (probing) side, at relaxed threshold `tEff`. */
+    def sizePrune(na: Column, nb: Column, tEff: Double): Column
+
+    /** The scores rounded to 6 dp (the oracle discipline, as
+      * [[minhashNearDupPairs]]) under their output names. A zero
+      * denominator — a pair of empty sets — scores null, as in the
+      * oracle, instead of failing the query under ANSI division. */
+    final def scores(i: Column, na: Column, nb: Column): Seq[Column] =
+      denominators(i, na, nb).zip(names).map { case (d, n) =>
+        round(try_divide(i.cast("double"), d), 6).as(n) }
+
+    /** The keep predicate, over the rounded score columns. */
+    final def keep: Column =
+      if (threshold == 0) lit(true)
+      else names.map(col(_) >= threshold).reduce(_ || _)
+  }
+
+  object SetMeasure {
+    /** `jaccard` = |A∩B| / |A∪B|. J ≥ t forces
+      * `t·max(|A|,|B|) ≤ min(|A|,|B|)`. */
+    final case class Jaccard(threshold: Double) extends SetMeasure {
+      val names = Seq("jaccard")
+      protected def denominators(i: Column, na: Column,
+                                 nb: Column): Seq[Column] =
+        Seq(na + nb - i)
+      val symmetric = true
+      def sizePrune(na: Column, nb: Column, tEff: Double): Column =
+        fits(na, nb, tEff) && fits(nb, na, tEff)
+    }
+
+    /** `containment_a` = |A∩B| / |A| (the fraction of A's distinct
+      * tokens that also appear in B) and symmetrically
+      * `containment_b`. Containment is the doc-IN-doc measure Jaccard
+      * misses: a short document wholly quoted inside a long one
+      * scores containment 1.0 but Jaccard ≈ |A|/|B| ≈ 0 — the
+      * boilerplate-inclusion / quote-plagiarism case a training-corpus
+      * curation pass must catch (broder97 resemblance-vs-containment).
+      * `|A∩B|/|A| ≥ t` needs `|B| ≥ t·|A|`: the containing side
+      * cannot be shorter than the required overlap. */
+    final case class Containment(threshold: Double) extends SetMeasure {
+      val names = Seq("containment_a", "containment_b")
+      protected def denominators(i: Column, na: Column,
+                                 nb: Column): Seq[Column] =
+        Seq(na, nb)
+      val symmetric = false
+      def sizePrune(na: Column, nb: Column, tEff: Double): Column =
+        fits(na, nb, tEff)
+    }
+  }
+
+  /** |B| can hold the ⌈t·|A|⌉-token overlap a qualifying A needs. The
+    * 1e-9 slack keeps an exactly-representable product from failing
+    * on binary-float noise. */
+  private def fits(na: Column, nb: Column, tEff: Double): Column =
+    na * lit(tEff) <= nb + lit(1e-9)
+
+  /** A document's distinct tokens, hashed ONCE (xxhash64 → long) and
+    * sorted: the per-pair intersect is then the allocation-free
+    * sorted-merge count over primitives (intersect_count_sorted;
+    * measured 3.3× and ~6× on the blocked verify stage), and equal
+    * sets are canonical. Exact up to 64-bit collisions (≈ |A|·|B|/2⁶⁴
+    * per pair), which the string-set DuckDB oracles rule out on the
+    * corpus. */
+  private def hashedTokenSet(text: Column): Column =
+    sort_array(transform(array_distinct(TextOps.tokens(text)),
+      t => xxhash64(t)))
+
+  /** Shard size for the dense all-pairs core ([[denseSetPairs]]):
     * past this many distinct token sets the single broadcast
     * nested-loop is SHARDED — the broadcast side splits into
     * ⌈M / shard⌉ hash-slices of ≤ shard groups each and the
     * width-pinned streamed side joins every slice, so broadcast
     * memory stays bounded and the M²/2 popcount work (embarrassingly
-    * parallel) spreads over shards × width tasks. Before r13 a
-    * tiny-vocab corpus with > 200k distinct sets silently FELL
-    * THROUGH to the prefix core — which on a tiny vocabulary is the
-    * measured 3.4-B-candidate pathology (the r12 VERDICT's #2
-    * latent edge); now vocab ≤ 62 ALWAYS routes dense. Tunable via
-    * the session conf `graft.dedup.denseCoreShardSize` (spec hook +
+    * parallel) spreads over shards × width tasks. Tunable via the
+    * session conf `graft.dedup.denseCoreShardSize` (spec hook +
     * deployment knob); the default keeps each broadcast ≤ ~6 MB. */
   private val denseCoreMaxGroups = 200000L
 
@@ -724,14 +816,11 @@ object DedupOps {
     * indistinguishable to any set measure, so candidate generation,
     * verification, and (in the dense core) the pair loop all run at
     * GROUP grain — on a boilerplate-heavy web corpus the group count
-    * is far below the doc count, and the savings are quadratic.
-    * Sets are canonicalized by sorting the hashed tokens (tokenizer
-    * order is first-occurrence, which would split equal sets). */
+    * is far below the doc count, and the savings are quadratic. */
   private def tokenSetGroups(df: DataFrame, idCol: String,
                              textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"),
-        sort_array(transform(array_distinct(TextOps.tokens(col(textCol))),
-          t => xxhash64(t))).as("__tok"))
+        hashedTokenSet(col(textCol)).as("__tok"))
       .groupBy("__tok")
       .agg(min("doc_id").as("__gid"),
         sort_array(collect_list("doc_id")).as("__members"))
@@ -765,7 +854,7 @@ object DedupOps {
         (array_position(vocabLit, t) - 1).cast("int"))))
   }
 
-  /** The broadcast slices of a dense core's build side: ⌈M / shard⌉
+  /** The broadcast slices of the dense core's build side: ⌈M / shard⌉
     * hash-slices of the group-grain frame, each small enough to
     * broadcast, whose union is the whole frame. One slice (no
     * sharding) below the shard size — the common case. Slicing is by
@@ -794,61 +883,61 @@ object DedupOps {
     }
   }
 
-  /** Dense all-pairs Jaccard over distinct-set groups encoded as
+  /** Dense all-pairs core over distinct-set groups encoded as
     * bitmasks: a broadcast nested-loop join whose condition is pure
-    * fused arithmetic (id order + size-ratio prune), jaccard from
-    * popcounts. The streamed side is width-pinned
+    * fused arithmetic (id order + the measure's size prune), scores
+    * from popcounts. The streamed side is width-pinned
     * (`repartition(defaultParallelism)`, REPARTITION_BY_NUM — the
     * AQE-coalesce opt-out, see Relational.computeDensePairJoin: M
     * group rows are KBs of bytes but M²/2 of compute). Exactness
     * needs no candidate filter at all here — every pair is checked.
-    * Past [[denseCoreShardSize]] groups the build side ships as
-    * [[broadcastShards]] hash-slices, each joined against the SAME
-    * streamed subtree (Catalyst reuses the pinned exchange) — the
-    * M²/2 work is inherent to the exact answer on a vocabulary where
-    * filters can't prune, so scale-out is by sharding, never by
-    * falling back to the degenerate prefix core. */
-  private def bitmaskJaccardSetPairs(groups: DataFrame,
-                                     vocab: Array[Long],
-                                     threshold: Double,
-                                     tEff: Double,
-                                     nGroups: Long): DataFrame = {
-    // empty sets never pair (the prefix core never generates them as
-    // candidates; here they'd put 0/0 — an ANSI divide-by-zero — into
-    // the loop), so they are excluded before it
+    * An asymmetric measure qualifies in EITHER direction, and the
+    * larger side of a pair always meets its own size bound, so its
+    * loop has no size prune. Past [[denseCoreShardSize]] groups the
+    * build side ships as [[broadcastShards]] hash-slices, each joined
+    * against the SAME streamed subtree (Catalyst reuses the pinned
+    * exchange) — the M²/2 work is inherent to the exact answer on a
+    * vocabulary where filters can't prune, so scale-out is by
+    * sharding, never by falling back to the degenerate prefix core.
+    *
+    * @return (__ga < __gb, scores…) at group grain */
+  private def denseSetPairs(groups: DataFrame, vocab: Array[Long],
+                            m: SetMeasure, tEff: Double,
+                            nGroups: Long): DataFrame = {
+    // empty sets never pair (their scores are null or 0, below any
+    // t > 0, and the prefix core never generates them as candidates),
+    // so they are excluded before the loop
     val masked = groups.filter(col("__n") > 0)
       .select(col("__gid"),
         col("__n").cast("double").as("__nn"),
         maskOf(col("__tok"), vocab).as("__mask"))
     val par = groups.sparkSession.sparkContext.defaultParallelism
     val a = masked.toDF("__ga", "__na", "__ma").repartition(par)
-    val shards = broadcastShards(
-      masked, nGroups, denseCoreShardSize(groups))
-    shards.map { sh =>
-      val b = broadcast(sh.toDF("__gb", "__nb", "__mb"))
-      a.join(b,
-          col("__ga") < col("__gb") &&
-          col("__na") * lit(tEff) <= col("__nb") + lit(1e-9) &&
-          col("__nb") * lit(tEff) <= col("__na") + lit(1e-9))
-        .withColumn("__i",
-          bit_count(col("__ma").bitwiseAND(col("__mb"))).cast("double"))
-        .withColumn("jaccard", round(col("__i") /
-          (col("__na") + col("__nb") - col("__i")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("__ga", "__gb", "jaccard")
+    val prune =
+      if (m.symmetric) m.sizePrune(col("__na"), col("__nb"), tEff)
+      else lit(true)
+    broadcastShards(masked, nGroups, denseCoreShardSize(groups)).map { sh =>
+      a.join(broadcast(sh.toDF("__gb", "__nb", "__mb")),
+          col("__ga") < col("__gb") && prune)
+        .select(col("__ga") +: col("__gb") +: m.scores(
+          bit_count(col("__ma").bitwiseAND(col("__mb"))),
+          col("__na"), col("__nb")): _*)
+        .filter(m.keep)
     }.reduce(_ unionByName _)
   }
 
-  /** Prefix-filter (AllPairs/PPJoin) Jaccard core over distinct-set
-    * groups — the general-vocabulary engine behind
-    * [[prefixFilterJaccardPairs]]; see that scaladoc for the bound
-    * and the cap semantics (postings here count GROUPS, which only
-    * tightens the bound — a group posting is never longer than the
-    * doc posting it replaces). */
-  private def prefixJaccardSetPairs(groups: DataFrame, threshold: Double,
-                                    tEff: Double,
-                                    maxBucketSize: Int): DataFrame = {
-    val toks = groups.select(col("__gid"), explode(col("__tok")).as("__t"))
+  /** Prefix-filter (AllPairs/PPJoin) core over distinct-set groups —
+    * the general-vocabulary engine behind [[setSimilarityPairs]]; see
+    * that scaladoc for the bound and the cap semantics (postings here
+    * count GROUPS, which only tightens the bound — a group posting is
+    * never longer than the doc posting it replaces).
+    *
+    * @return (__ga < __gb, scores…) at group grain */
+  private def prefixSetPairs(groups: DataFrame, m: SetMeasure,
+                             tEff: Double,
+                             maxBucketSize: Int): DataFrame = {
+    val toks = groups.select(col("__gid"), col("__n"),
+      explode(col("__tok")).as("__t"))
     val dfreq = toks.groupBy("__t").agg(count(lit(1)).as("__df"))
     // rarity order = (df asc, token asc): deterministic global total
     // order with every set's rarest tokens first; sorting happens
@@ -867,40 +956,47 @@ object DedupOps {
         ceil(lit(tEff) * col("__n") - lit(1e-9)) + 1).cast("int"))
       .select(col("__gid"), col("__n"),
         explode(slice(col("__sorted"), lit(1),
-          greatest(col("__p"), lit(0))))
-          .as("__pt"))
-    val posting =
-      if (maxBucketSize == Int.MaxValue) pref
-      else {
-        val small = pref.groupBy("__pt")
-          .agg(count(lit(1)).as("__psz"))
-          .filter(col("__psz") <= maxBucketSize && col("__psz") > 1)
-          .select("__pt")
-        pref.join(small, Seq("__pt"))
-      }
-    val a = posting.select(col("__pt"), col("__gid").as("__ga"),
+          greatest(col("__p"), lit(0)))).as("__t"))
+    // what the prefixes probe: other prefixes for a symmetric
+    // measure; otherwise the FULL postings, semi-joined down to the
+    // distinct prefix vocabulary — a token in nobody's prefix can
+    // never seed a candidate, and that drops the bulk of every set's
+    // common tokens before the candidate shuffle
+    val indexed =
+      if (m.symmetric) pref
+      else toks.join(pref.select("__t").distinct(), "__t")
+    // the optional cap drops index postings longer than it; a
+    // posting of one group can only pair that group with itself
+    val index =
+      if (maxBucketSize == Int.MaxValue) indexed
+      else indexed.join(indexed.groupBy("__t")
+        .agg(count(lit(1)).as("__psz"))
+        .filter(col("__psz") <= maxBucketSize && col("__psz") > 1)
+        .select("__t"), "__t")
+    // candidates carry (token, id, set size) ONLY — token arrays
+    // never enter the candidate shuffle (the minhashCandidates
+    // slimness rule); the size prune runs before the pair dedup
+    val a = pref.select(col("__t"), col("__gid").as("__ga"),
       col("__n").as("__na"))
-    val b = posting.select(col("__pt"), col("__gid").as("__gb"),
+    val b = index.select(col("__t"), col("__gid").as("__gb"),
       col("__n").as("__nb"))
-    val cand = a.join(b, Seq("__pt"))
-      .filter(col("__ga") < col("__gb") &&
-        // J ≥ t forces min(|A|,|B|)/max(|A|,|B|) ≥ t — prune before
-        // the pair-dedup shuffle
-        col("__na") * lit(tEff) <= col("__nb") + lit(1e-9) &&
-        col("__nb") * lit(tEff) <= col("__na") + lit(1e-9))
-      .groupBy("__ga", "__gb")
-      .agg(count(lit(1)).as("__shared_prefix"))
+    val cand = a.join(b, "__t")
+      .filter((if (m.symmetric) col("__ga") < col("__gb")
+        else col("__ga") =!= col("__gb")) &&
+        m.sizePrune(col("__na"), col("__nb"), tEff))
+      .select(least(col("__ga"), col("__gb")).as("__ga"),
+        greatest(col("__ga"), col("__gb")).as("__gb"))
+      .distinct()
     val sa = groups.select(col("__gid").as("__ga"), col("__tok").as("__ta"))
     val sb = groups.select(col("__gid").as("__gb"), col("__tok").as("__tb"))
     cand.join(sa, Seq("__ga")).join(sb, Seq("__gb"))
       // __tok is sorted at construction (tokenSetGroups) — the
       // sorted-merge count kernel applies
-      .withColumn("__i", graft.functions.native
-        .intersect_count_sorted(col("__ta"), col("__tb")).cast("int"))
-      .withColumn("jaccard", round(col("__i").cast("double") /
-        (size(col("__ta")) + size(col("__tb")) - col("__i")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("__ga", "__gb", "jaccard")
+      .select(col("__ga") +: col("__gb") +: m.scores(
+        graft.functions.native.intersect_count_sorted(
+          col("__ta"), col("__tb")),
+        size(col("__ta")), size(col("__tb"))): _*)
+      .filter(m.keep)
   }
 
   /** All ordered (a < b) pairs from a SORTED id array, as structs —
@@ -912,198 +1008,148 @@ object DedupOps {
       transform(slice(sortedIds, i + lit(2), size(sortedIds)),
         y => struct(x.as("a"), y.as("b")))))
 
-  // ------------------------------------------------------------------
-  // Prefix-filtered exact Jaccard join (AllPairs / PPJoin family)
-  // ------------------------------------------------------------------
-
-  /** EXACT token-set Jaccard pair join at `threshold` with
-    * prefix-filter candidate generation — the deterministic scale
-    * path the blocked all-pairs forms ([[ngramJaccardPairs]],
-    * [[containmentPairs]]) lack, and the exact complement to the
-    * probabilistic LSH family: output is provably ALL pairs with
-    * rounded jaccard ≥ t, no banding miss probability, no bucket-cap
-    * recall trade (default cap is uncapped).
+  /** EXACT corpus-global set-similarity pair join: every (a < b) pair
+    * whose rounded score under `measure` reaches its threshold, over
+    * the whole input — no blocking keys, no block caps, no data drops
+    * (default cap is uncapped). The deterministic scale path the
+    * blocked form ([[blockedSetSimilarityPairs]]) lacks, and the
+    * exact complement to the probabilistic LSH family: no banding
+    * miss probability, no bucket-cap recall trade.
     *
-    * The published AllPairs/PPJoin bound (Bayardo et al. WWW'07;
-    * Xiao et al. WWW'08): under ANY common total token order, if
-    * `J(A,B) ≥ t` then `|A∩B| ≥ ⌈t·|A|⌉` (since `|B| ≥ |A∩B|`), so
-    * the first `|A| - ⌈t·|A|⌉ + 1` tokens of A — its PREFIX — and
-    * B's prefix must share a token. Candidates are therefore pairs
-    * sharing ≥ 1 prefix token, a tiny fraction of all pairs when the
-    * order puts RARE tokens first (each doc's prefix is its rarest
-    * tokens, whose postings are short by definition).
+    * Candidates come from prefix filtering — the published
+    * AllPairs/PPJoin bound (Bayardo et al. WWW'07; Xiao et al.
+    * WWW'08). Under ANY common total token order, a score of A
+    * against B ≥ t forces `|A∩B| ≥ ⌈t·|A|⌉`, so B must hold one of
+    * A's first `|A| − ⌈t·|A|⌉ + 1` tokens — its PREFIX (miss them all
+    * and the overlap tops out at `⌈t·|A|⌉ − 1 < t·|A|`). Jaccard
+    * bounds both sides, so A's prefix and B's prefix must share a
+    * token. Containment bounds only its denominator side: each set
+    * probes with its prefix against every set's FULL postings, and
+    * the two probe directions cover the OR of the two containments.
+    * Ordering RARE tokens first keeps prefixes on short postings.
+    * The measure's size prune ([[SetMeasure.sizePrune]]) drops
+    * candidates before the pair-dedup shuffle, and token-set
+    * verification joins run only for surviving pairs.
     *
-    * Scale shape (all stages at DISTINCT-SET grain — see
-    * [[tokenSetGroups]]; docs with equal token sets collapse before
-    * any quadratic work and expand back at the end, within-group
-    * pairs emitted at jaccard 1.0 directly):
+    * Scale shape — all stages at DISTINCT-SET grain
+    * ([[tokenSetGroups]]: identical sets collapse before any
+    * quadratic work and expand back at the end, within-group pairs
+    * emitted at score 1.0 directly):
     *  - token frequencies: one vocab-grain aggregate;
     *  - rarity-sorting: one per-set aggregate (sort is per-row,
     *    inside the array);
-    *  - the candidate self-join carries (prefix-token, id, set-size)
-    *    ONLY — token arrays never enter the candidate shuffle (the
-    *    minhashCandidates slimness rule);
-    *  - a size filter (`t·max ≤ min`) prunes candidates before the
-    *    pair-dedup shuffle;
-    *  - payload verification joins run only for surviving pairs.
-    * Explode width is Σ(prefix sizes) ≈ (1-t)·corpus tokens — at
-    * t = 0.8, a fifth of the corpus token stream, shrinking as the
-    * threshold rises.
+    *  - explode width Σ(prefix sizes) ≈ (1-t)·corpus tokens — at
+    *    t = 0.8 a fifth of the token stream, shrinking as t rises.
+    * Containment's candidate width is Σ_tokens |prefixPosting| ×
+    * |fullPosting| — corpus-linear when prefixes hold only rare
+    * tokens, and OUTPUT-bound in the degenerate case (a 1-token
+    * doc's prefix is its whole self; its true containment fan-out IS
+    * every doc sharing that token — exactness has no smaller answer).
     *
     * DEGENERATE-VOCABULARY ESCAPE HATCH: prefix filtering assumes
-    * rare tokens exist. On a tiny-universe corpus (tag sets,
-    * categorical baskets, template boilerplate) every posting is
-    * corpus-hot and candidate generation explodes quadratically
-    * (measured on a 28-token corpus at sf4: 3.4 B candidates, 70 GB
-    * spill, 1044 s — for a 46 M-pair true answer DuckDB produced in
-    * 6.5 s). When the vocabulary fits a 63-bit mask
-    * ([[smallUniverse]]) and there are ≤ [[denseCoreMaxGroups]]
-    * distinct sets, the core switches to [[bitmaskJaccardSetPairs]]:
-    * each set is ONE long, all M²/2 group pairs are checked by fused
-    * popcount arithmetic under a width-pinned broadcast loop — exact,
-    * no candidate structure at all, and faster than any filter when
-    * filters can't prune (before/after measured in BASELINE.md's sf4
-    * row). The dense
-    * core ignores `maxBucketSize` (nothing to cap — so a non-default
-    * cap forces the prefix core, which the cap spec exploits).
+    * rare tokens exist; on a tiny-universe corpus every posting is
+    * corpus-hot and candidates explode quadratically (a 28-token
+    * corpus at sf4: 3.4 B candidates, 70 GB spill, 1044 s for a
+    * 46 M-pair answer DuckDB produced in 6.5 s). When the vocabulary
+    * fits a 63-bit mask ([[smallUniverse]]) the core is
+    * [[denseSetPairs]] instead, whatever the group count — exact
+    * popcount arithmetic over all group pairs, faster than any filter
+    * that can't prune (before/after in BASELINE.md's sf4 row).
     *
-    * `maxBucketSize` (default uncapped — this operator's contract is
-    * exactness) optionally drops prefix-token postings longer than
-    * the cap — the 100 TB safety valve. Threshold↔hotness: the
-    * prefix length is ≈ (1-t)·|A| + 1, so a LOW threshold puts most
-    * of every document into its prefix, COMMON tokens included —
-    * their postings are corpus-hot and the candidate join on them is
-    * quadratic. At high t prefixes hold only each doc's rarest
-    * tokens and the cap rarely binds. Drop semantics when it does
-    * bind: a true pair is lost iff EVERY prefix token the two docs
-    * share is over the cap (one surviving shared rare token keeps
-    * the pair — candidates need any single common posting); postings
-    * of size 1 generate no candidates and are always pruned. Corpora
-    * where rare-token postings still exceed the cap are
-    * mass-duplicated boilerplate — the LSH family's documented
-    * territory. Capped-path contract spec'd in DedupSpec
-    * ("maxBucketSize cap").
+    * `maxBucketSize` optionally drops index postings (prefix postings
+    * for Jaccard, full postings for containment) longer than the cap
+    * — the 100 TB safety valve. The dense core has nothing to cap, so
+    * a non-default cap forces the prefix core (the cap spec and the
+    * dense-vs-prefix agreement spec rely on this). The prefix length
+    * is ≈ (1-t)·|A| + 1, so a LOW threshold puts COMMON tokens into
+    * prefixes and the cap binds; at high t prefixes hold only rare
+    * tokens. When it binds, a true pair is lost iff EVERY prefix
+    * token seeding it is over the cap; postings of size 1 generate no
+    * candidates and are always pruned. Corpora whose rare-token
+    * postings still exceed the cap are mass-duplicated boilerplate —
+    * the LSH family's territory.
     *
-    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded
-    *         to 6 dp and filtered on the rounded value (oracle
-    *         discipline, as [[minhashNearDupPairs]]) */
-  def prefixFilterJaccardPairs(df: DataFrame, idCol: String,
-                               textCol: String, threshold: Double,
-                               maxBucketSize: Int = Int.MaxValue)
-      : DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold=$threshold")
-    // the FINAL filter accepts the 6-dp-ROUNDED jaccard ≥ t, so a
-    // pair at true jaccard t - 5e-7 can legitimately pass — candidate
-    // generation (prefix length, size filter) must therefore run at a
+    * @return (id_a, id_b, scores…) with id_a < id_b — `jaccard`, or
+    *         `containment_a` / `containment_b` following the ids —
+    *         rounded to 6 dp and filtered on the rounded values; the
+    *         result is eagerly materialized */
+  def setSimilarityPairs(df: DataFrame, idCol: String, textCol: String,
+                         measure: SetMeasure,
+                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val t = measure.threshold
+    require(t > 0 && t <= 1, s"threshold=$t")
+    // the FINAL filter accepts the 6-dp-ROUNDED score ≥ t, so a pair
+    // at true score t - 5e-7 can legitimately pass — candidate
+    // generation (prefix length, size prune) must therefore run at a
     // slightly relaxed threshold or those round-up borderline pairs
     // would be pruned before verification ever sees them
-    val tEff = threshold - 1e-6
+    val tEff = t - 1e-6
     val groups = tokenSetGroups(df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // two bounded actions pick the core: group census (materializes
-    // the persist) + ≤63-row vocabulary collect. A tiny vocabulary
-    // ALWAYS routes dense regardless of group count (sharded past
-    // denseCoreShardSize) — the prefix core on a ≤62-token universe
-    // is the measured candidate-explosion pathology, so falling back
-    // to it at high group counts would be falling INTO the trap the
-    // dense core exists to avoid. A non-default cap still forces the
-    // prefix core (the dense core has nothing to cap; the capped-path
-    // contract spec relies on this).
+    // the persist) + ≤63-row vocabulary collect
     val nGroups = groups.count()
     val vocab =
-      if (maxBucketSize == Int.MaxValue) smallUniverse(groups)
-      else None
-    // (__ga < __gb, jaccard) pairs at distinct-set grain
+      if (maxBucketSize == Int.MaxValue) smallUniverse(groups) else None
     val gp = vocab match {
-      case Some(v) =>
-        bitmaskJaccardSetPairs(groups, v, threshold, tEff, nGroups)
-      case None => prefixJaccardSetPairs(groups, threshold, tEff,
-        maxBucketSize)
+      case Some(v) => denseSetPairs(groups, v, measure, tEff, nGroups)
+      case None => prefixSetPairs(groups, measure, tEff, maxBucketSize)
     }
     // expand to doc pairs: cross-group via member lists (group ids
-    // don't order member ids — least/greatest renormalizes), plus
+    // don't order member ids — least/greatest renormalizes, and an
+    // asymmetric measure's scores swap with the ids), plus
     // within-group identical-set pairs at exactly 1.0 (empty sets
-    // excluded: the all-arrays form never emitted them — 0/0 jaccard
-    // is null)
+    // excluded: the all-arrays form never emitted them — their 0/0
+    // score is null)
+    val scores = measure.names
     val ma = groups.select(col("__gid").as("__ga"),
       col("__members").as("__mas"))
     val mb = groups.select(col("__gid").as("__gb"),
       col("__members").as("__mbs"))
+    val renormalized =
+      if (measure.symmetric) scores.map(col)
+      else scores.zip(scores.reverse).map { case (s, r) =>
+        when(col("__x") < col("__y"), col(s)).otherwise(col(r)).as(s) }
     val cross = gp.join(ma, "__ga").join(mb, "__gb")
-      .select(col("jaccard"), explode(col("__mas")).as("__x"),
-        col("__mbs"))
-      .select(col("jaccard"), col("__x"),
-        explode(col("__mbs")).as("__y"))
-      .select(least(col("__x"), col("__y")).as("id_a"),
-        greatest(col("__x"), col("__y")).as("id_b"), col("jaccard"))
+      .select(scores.map(col) :+ explode(col("__mas")).as("__x") :+
+        col("__mbs"): _*)
+      .select(scores.map(col) :+ col("__x") :+
+        explode(col("__mbs")).as("__y"): _*)
+      .select(least(col("__x"), col("__y")).as("id_a") +:
+        greatest(col("__x"), col("__y")).as("id_b") +: renormalized: _*)
     val within = groups
       .filter(col("__n") > 0 && size(col("__members")) > 1)
       .select(explode(orderedPairs(col("__members"))).as("__pr"))
-      .select(col("__pr.a").as("id_a"), col("__pr.b").as("id_b"),
-        lit(1.0).as("jaccard"))
+      .select(col("__pr.a").as("id_a") +: col("__pr.b").as("id_b") +:
+        scores.map(lit(1.0).as(_)): _*)
     val out = cross.unionByName(within)
-      // eager localCheckpoint, not persist: the result must
-      // materialize before the corpus-scale group cache is released,
-      // and checkpoint storage is reclaimed by the context cleaner
-      // when the frame is no longer referenced — a persist here had
-      // no unpersist path, so long sessions calling the operator
-      // repeatedly accumulated cached partitions forever
+      // eager localCheckpoint, not persist: the result materializes
+      // before the group cache is released, and the context cleaner
+      // reclaims its storage once the frame is unreferenced (a
+      // persist would have no unpersist path and leak per call)
       .localCheckpoint(true)
     groups.unpersist()
     out
   }
 
-  // ------------------------------------------------------------------
-  // n-gram Jaccard
-  // ------------------------------------------------------------------
-
-  /** Dropped-block accounting for the block-capped pair operators
-    * ([[ngramJaccardPairs]], [[containmentPairs]]): ONE row —
-    * `dropped_blocks` (blocks whose population exceeds
-    * `maxBlockSize`) and `dropped_docs` (total documents inside
-    * them). The caps are a deliberate cartesian-bomb guard, but a
-    * silent drop reads as "covered everything" to a 100 TB operator
-    * — cross-join (broadcast) this onto the pair output, or run it
-    * as a side metric, so the coverage loss is VISIBLE (the repo's
-    * no-silent-caps principle; VERDICT r8 wrong #3). Cost: one
-    * block-grain global fold — the per-block count aggregate is the
-    * SAME subtree as the operators' small-block prune (identical
-    * null-key filter, below), so when cross-joined onto their output
-    * Catalyst reuses that exchange and only the tiny block-grain
-    * SinglePartition fold is new. Null-key docs are excluded on both
-    * sides to keep the subtrees canonical — they never enter the
-    * pair join anyway (inner-join block semantics), so they are not
-    * a size-cap drop. */
-  /** WORK-BUDGET-derived block cap for the exact verification tiers —
-    * the registry default since r15 (VERDICT r14 "what's wrong #2":
-    * the fixed 10000 was a human-picked constant the scale legs
-    * outgrew — zipf8's survivors sat at ~2/3 cap, the documented
-    * worst point of the capped-posture walk, and `containment_dedup`
-    * paid 400 s where the measured cap-4000 posture costs ~66 s
-    * including LSH-on-dropped). The tier's work is bounded by
-    * #blocks × cap²/2 REGARDLESS of corpus size (CappedTierLeg's
-    * proven invariant), so the cap becomes the derived quantity:
-    * the largest cap whose worst-case pair mass stays inside
-    * `pairBudget`, i.e. `floor(sqrt(2·budget / #blocks))`, clamped to
-    * [2, capCeil]. #blocks counts non-null-key blocks with at least 2
-    * documents — the only ones that can produce pairs — the SAME
-    * census subtree the operators and [[droppedBlockStats]] already
-    * fold, evaluated once driver-side (block-count-grain, the
-    * pairWorkSalts collect discipline).
+  /** WORK-BUDGET-derived block cap for [[blockedSetSimilarityPairs]]
+    * — the registry default since r15, replacing a fixed 10000 the
+    * scale legs outgrew (`containment_dedup` paid 400 s at zipf8
+    * where the cap-4000 posture costs ~66 s including
+    * LSH-on-dropped). The tier's work is bounded by #blocks × cap²/2
+    * REGARDLESS of corpus size (CappedTierLeg), so the cap is the
+    * largest one whose worst-case pair mass fits `pairBudget`:
+    * `floor(sqrt(2·budget / #blocks))`, clamped to [2, capCeil].
+    * #blocks counts non-null-key blocks of ≥ 2 documents — the only
+    * ones that can pair — over the [[droppedBlockStats]] census.
     *
-    * Default budget 320M pairs ≈ the tier mass the measured postures
-    * clear in about a minute at local[32] (CappedTierLeg zipf4:
-    * ~163M surviving pairs → 77.6 s); on the zipf leg family's
-    * 40-block shape it derives cap = 4000 — exactly the posture the
-    * leg measured as the efficient escape point (tier collapses
-    * toward its census, oversized blocks ride LSH with the drop
-    * accounted). A corpus with more blocks derives a tighter cap so
-    * the stage's total work stays budget-bounded; fewer blocks relax
-    * it up to `capCeil`. Deterministic and engine-portable: a pure
-    * integer/sqrt function of the block census, so an oracle
-    * re-derives the identical cap in SQL (IEEE-exact sqrt both
-    * engines). Degenerate no-pairable-blocks census (n = 0) returns
-    * `capCeil` — no block can produce pairs, the value is inert. */
+    * The default 320M pairs ≈ the tier mass the measured postures
+    * clear in about a minute at local[32] (CappedTierLeg zipf4: ~163M
+    * surviving pairs → 77.6 s); on the zipf legs' 40 blocks it
+    * derives cap = 4000, the measured efficient escape point. A pure
+    * integer/sqrt function of the census, so an oracle re-derives the
+    * identical cap in SQL (IEEE-exact sqrt in both engines). A census
+    * with no pairable block (n = 0) returns the inert `capCeil`. */
   def workBudgetCap(df: DataFrame, blockCols: Seq[String],
                     pairBudget: Long = 320000000L,
                     capCeil: Int = 10000): Int = {
@@ -1117,6 +1163,22 @@ object DedupOps {
       math.sqrt(2.0 * pairBudget / n).toLong)).toInt
   }
 
+  /** Dropped-block accounting for [[blockedSetSimilarityPairs]]: ONE
+    * row — `dropped_blocks` (blocks whose population exceeds
+    * `maxBlockSize`) and `dropped_docs` (total documents inside
+    * them). The caps are a deliberate cartesian-bomb guard, but a
+    * silent drop reads as "covered everything" to a 100 TB operator
+    * — cross-join (broadcast) this onto the pair output, or run it
+    * as a side metric, so the coverage loss is VISIBLE (the repo's
+    * no-silent-caps principle; VERDICT r8 wrong #3). Cost: one
+    * block-grain global fold — the per-block count aggregate is the
+    * SAME subtree as the operator's small-block prune (identical
+    * null-key filter, below), so when cross-joined onto its output
+    * Catalyst reuses that exchange and only the tiny block-grain
+    * SinglePartition fold is new. Null-key docs are excluded on both
+    * sides to keep the subtrees canonical — they never enter the pair
+    * join anyway (inner-join block semantics), so they are not a
+    * size-cap drop. */
   def droppedBlockStats(df: DataFrame, blockCols: Seq[String],
                         maxBlockSize: Int = 10000): DataFrame =
     df.filter(blockCols.map(col(_).isNotNull).reduce(_ && _))
@@ -1128,67 +1190,57 @@ object DedupOps {
         coalesce(sum(when(col("__bsz") > maxBlockSize, col("__bsz"))),
           lit(0L)).as("dropped_docs"))
 
-  /** Exact token-set Jaccard for all (a < b) pairs within a blocking
-    * key (e.g. language+source) — the verification-quality measure,
-    * viable when blocks are small.
+  /** Exact set similarity under `measure` for all (a < b) pairs
+    * within a blocking key (e.g. language+source) — the
+    * verification-quality tier, viable when blocks are small. Pairs
+    * failing the measure's threshold are dropped map-side, before
+    * the result shuffle; `Jaccard(0)` keeps every pair.
     *
     * Blocks larger than `maxBlockSize` are DROPPED, same policy as the
     * hot-bucket caps in [[minhashCandidates]] and
     * [[simhashNearDupPairs]]: the self-join is B²/2 within a block, so
     * without a cap one hot block (lang='en', source='web' at corpus
     * scale) is a cartesian bomb; oversized blocks belong to the LSH
-    * paths, which are built for them. Pair with
-    * [[droppedBlockStats]] so the drop is accounted, not silent. */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        blockCols: Seq[String],
-                        maxBlockSize: Int = 10000): DataFrame = {
-    // tokens are hashed ONCE per doc (xxhash64 → long) so the
-    // per-pair intersect hashes primitives, not strings — a doc's
-    // tokens would otherwise be re-hashed for every pair it appears
-    // in (measured 3.3× on the verify stage). Set equality over
-    // 64-bit hashes is exact up to collisions (≈ |A|·|B|/2⁶⁴ per
-    // pair); the string-set DuckDB oracle hash-matching at the gate
-    // proves collision-freedom on the corpus. Sorted per doc: the
-    // per-pair intersect is then the allocation-free sorted-merge
-    // count (intersect_count_sorted), not a per-pair hash-set build —
-    // measured ~6× on the zipf corpus's B²-shaped blocked stage,
-    // where the old size(array_intersect) was the whole cost.
+    * paths, which are built for them, and the exact uncapped answer
+    * is [[setSimilarityPairs]]. Pair with [[droppedBlockStats]] so
+    * the drop is accounted, not silent.
+    *
+    * @return (blockCols…, id_a, id_b, scores…) with id_a < id_b,
+    *         scores rounded to 6 dp */
+  def blockedSetSimilarityPairs(df: DataFrame, idCol: String,
+                                textCol: String, blockCols: Seq[String],
+                                measure: SetMeasure,
+                                maxBlockSize: Int = 10000): DataFrame = {
+    require(measure.threshold >= 0 && measure.threshold <= 1,
+      s"threshold=${measure.threshold}")
     val base = df.select((col(idCol).as("doc_id") +:
-      sort_array(transform(array_distinct(TextOps.tokens(col(textCol))),
-        t => xxhash64(t))).as("__tok") +:
-      blockCols.map(col)): _*)
+      hashedTokenSet(col(textCol)).as("__tok") +: blockCols.map(col)): _*)
     // block-size prune carries only the blocking key, never the
-    // tokens. Deliberately NOT persisted (r14, revisiting ADVICE
-    // r13): the census subtree is kept PLAN-IDENTICAL to the one
-    // [[droppedBlockStats]] builds, so when a caller composes pairs
-    // + accounting (the registry posture) AQE reuses ONE exchange
-    // for both at execution — a persisted census here breaks that
+    // tokens. Deliberately NOT persisted: the census subtree is kept
+    // PLAN-IDENTICAL to the one [[droppedBlockStats]] builds, so when
+    // a caller composes pairs + accounting (the registry posture) AQE
+    // reuses ONE exchange for both — a persisted census breaks that
     // identity and the accounting fold re-scans the corpus in-plan
     // (audited: +1 full-data exchange on ngram_jaccard_topk). The
-    // salt derivation's construction-time collect does evaluate the
-    // census once more as a side job; persisting would merely move
-    // that scan onto the accounting path, not remove it.
+    // salt derivation's collect evaluates the census once more as a
+    // side job; persisting would only move that scan, not remove it.
     val blockCensus = df.groupBy(blockCols.map(col): _*)
       .agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") <= maxBlockSize && col("__bsz") > 1)
     val smallBlocks = blockCensus.select(blockCols.map(col): _*)
     // tiny-universe fast path: when the corpus vocabulary fits a
     // 63-bit mask, the pair stage carries an 8-byte mask per doc
-    // instead of a token array, and the per-pair intersect is two
-    // popcounts — the B²/2 within-block work becomes fused arithmetic
-    // (0/0 → null jaccard for empty-set pairs, same as the array
-    // form). The census is one token-grain distinct, ~free next to
-    // the quadratic stage it can save.
-    val (enc, iCol, nA, nB) = smallUniverse(base) match {
-      case Some(v) => (
-        base.select((col("doc_id") +:
-          maskOf(col("__tok"), v).as("__tok") +: blockCols.map(col)): _*),
+    // instead of a token array and the per-pair intersect is a
+    // popcount. The census is one token-grain distinct, ~free next
+    // to the quadratic stage it can save.
+    val (enc, inter, card) = smallUniverse(base) match {
+      case Some(v) => (base.withColumn("__tok", maskOf(col("__tok"), v)),
         (ta: Column, tb: Column) => bit_count(ta.bitwiseAND(tb)),
-        (ta: Column) => bit_count(ta), (tb: Column) => bit_count(tb))
+        (t: Column) => bit_count(t))
       case None => (base,
-        (ta: Column, tb: Column) => graft.functions.native
-          .intersect_count_sorted(ta, tb),
-        (ta: Column) => size(ta), (tb: Column) => size(tb))
+        (ta: Column, tb: Column) =>
+          graft.functions.native.intersect_count_sorted(ta, tb),
+        (t: Column) => size(t))
     }
     val a = enc.toDF(("id_a" +: "__ta" +: blockCols): _*)
       .join(smallBlocks, blockCols)
@@ -1202,270 +1254,15 @@ object DedupOps {
     // carry ~500M of the ~560M pairs, pinning half the stage onto the
     // few tasks those blocks hash to). The salt count derives from
     // the block-work census (max B² vs Σ B² — pairWorkSalts), so a
-    // hotter corpus splits wider without a human re-measuring (the
-    // r12 hand-pin of 4 came from exactly that measurement).
+    // hotter corpus splits wider without a human re-measuring.
     Relational.computeDensePairJoin(a, b, blockCols,
         nSalts = Relational.pairWorkSalts(blockCensus, "__bsz"))
       .filter(col("id_a") < col("id_b"))
-      // size-arithmetic union (see minhashNearDupPairs note): the
-      // verify math is one intersect per pair, no union array build
-      .withColumn("__i", iCol(col("__ta"), col("__tb")))
-      .withColumn("jaccard", round(col("__i").cast("double") /
-        (nA(col("__ta")) + nB(col("__tb")) - col("__i")), 6))
-      .select((blockCols.map(col) :+ col("id_a") :+ col("id_b") :+
-        col("jaccard")): _*)
-  }
-
-  /** Exact token-set CONTAINMENT for all (a < b) pairs within a
-    * blocking key: `containment_a = |A∩B| / |A|` (the fraction of A's
-    * distinct tokens that also appear in B) and symmetrically
-    * `containment_b`. Containment is the doc-IN-doc measure Jaccard
-    * misses: a short document wholly quoted inside a long one scores
-    * containment 1.0 but Jaccard ≈ |A|/|B| ≈ 0 — exactly the
-    * boilerplate-inclusion / quote-plagiarism case a training-corpus
-    * curation pass must catch (broder97 resemblance-vs-containment
-    * distinction).
-    *
-    * Same block-cap policy and hashed-token intersect as
-    * [[ngramJaccardPairs]] (this is the small-block verification
-    * measure; corpus-scale candidate generation stays LSH's job —
-    * min-wise containment sketches would slot in exactly like the
-    * minhash path). Pairs below `minContainment` in BOTH directions
-    * are dropped map-side, before the result shuffle. */
-  def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       blockCols: Seq[String], minContainment: Double,
-                       maxBlockSize: Int = 10000): DataFrame = {
-    // sorted hashed sets — the ngramJaccardPairs sorted-merge kernel
-    val base = df.select((col(idCol).as("doc_id") +:
-      sort_array(transform(array_distinct(TextOps.tokens(col(textCol))),
-        t => xxhash64(t))).as("__tok") +:
-      blockCols.map(col)): _*)
-    // NOT persisted — subtree kept identical to droppedBlockStats'
-    // census for exchange reuse (the ngramJaccardPairs census note)
-    val blockCensus = df.groupBy(blockCols.map(col): _*)
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") <= maxBlockSize && col("__bsz") > 1)
-    val smallBlocks = blockCensus.select(blockCols.map(col): _*)
-    // tiny-universe fast path — masks instead of token arrays through
-    // the quadratic stage (see ngramJaccardPairs)
-    val (enc, iCol, nA, nB) = smallUniverse(base) match {
-      case Some(v) => (
-        base.select((col("doc_id") +:
-          maskOf(col("__tok"), v).as("__tok") +: blockCols.map(col)): _*),
-        (ta: Column, tb: Column) => bit_count(ta.bitwiseAND(tb)),
-        (ta: Column) => bit_count(ta), (tb: Column) => bit_count(tb))
-      case None => (base,
-        (ta: Column, tb: Column) => graft.functions.native
-          .intersect_count_sorted(ta, tb),
-        (ta: Column) => size(ta), (tb: Column) => size(tb))
-    }
-    val a = enc.toDF(("id_a" +: "__ta" +: blockCols): _*)
-      .join(smallBlocks, blockCols)
-    val b = enc.toDF(("id_b" +: "__tb" +: blockCols): _*)
-    // pinned-width salted pair join — same AQE-coalesce guard and
-    // census-derived hot-block work split as ngramJaccardPairs
-    Relational.computeDensePairJoin(a, b, blockCols,
-        nSalts = Relational.pairWorkSalts(blockCensus, "__bsz"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("__i", iCol(col("__ta"), col("__tb")))
-      .withColumn("containment_a",
-        round(col("__i").cast("double") / nA(col("__ta")), 6))
-      .withColumn("containment_b",
-        round(col("__i").cast("double") / nB(col("__tb")), 6))
-      .filter(col("containment_a") >= minContainment ||
-        col("containment_b") >= minContainment)
-      .select((blockCols.map(col) :+ col("id_a") :+ col("id_b") :+
-        col("containment_a") :+ col("containment_b")): _*)
-  }
-
-  /** EXACT corpus-global containment pair join via ASYMMETRIC prefix
-    * filtering — [[containmentPairs]] without blocking keys, block
-    * caps, or data drops: every (a < b) pair whose rounded
-    * containment reaches `minContainment` in EITHER direction, over
-    * the whole input. The scale path the blocked form lacks: its
-    * cap DROPS oversized blocks (accounted, but dropped); this form
-    * is complete by the same published bound family as
-    * [[prefixFilterJaccardPairs]] (Bayardo et al. WWW'07), adapted to
-    * the asymmetric measure.
-    *
-    * The asymmetric bound: `|A∩B|/|A| ≥ t` forces `|A∩B| ≥ ⌈t·|A|⌉`,
-    * so B must hold at least one of A's first `|A| − ⌈t·|A|⌉ + 1`
-    * rarity-ordered tokens (miss them all and the overlap tops out at
-    * `⌈t·|A|⌉ − 1 < t·|A|`). Only the DENOMINATOR side's prefix is
-    * bounded — the containing side contributes its FULL token list to
-    * the index (any of its tokens can be the shared rare one). Each
-    * doc therefore probes with its prefix against every doc's full
-    * postings; the union over both probe directions covers the OR of
-    * the two containments, and candidates prune on the necessary size
-    * condition `|B| ≥ t·|A|` (the containing side cannot be shorter
-    * than the required overlap) before the pair-dedup shuffle.
-    *
-    * Scale shape: all stages at DISTINCT-SET grain
-    * ([[tokenSetGroups]] — identical sets collapse before any
-    * quadratic work, expand back at the end, within-group pairs at
-    * containment 1.0/1.0 directly). Candidate width is
-    * Σ_tokens |prefixPosting| × |fullPosting| — corpus-linear when
-    * prefixes hold only rare tokens (high t), and OUTPUT-bound in
-    * the degenerate case (a 1-token doc's prefix is its whole self;
-    * its true containment fan-out IS every doc sharing that token —
-    * exactness has no smaller answer). Tokens never ride the
-    * candidate shuffle (ids + sizes only; the minhashCandidates
-    * slimness rule); verification joins token sets for surviving
-    * pairs only. On a tiny-universe corpus (vocab ≤ 62, the regime
-    * where EVERY posting is corpus-hot and probe × full-posting
-    * candidates go quadratic) the core switches to the dense bitmask
-    * loop ([[bitmaskContainmentSetPairs]]) — exact popcount
-    * containment over all group pairs, same escape hatch as
-    * [[prefixFilterJaccardPairs]].
-    *
-    * @return (id_a, id_b, containment_a, containment_b) with
-    *         id_a < id_b, both rounded to 6 dp and filtered on the
-    *         rounded values (oracle discipline). */
-  def containmentPairsPrefix(df: DataFrame, idCol: String,
-                             textCol: String,
-                             minContainment: Double): DataFrame = {
-    require(minContainment > 0 && minContainment <= 1,
-      s"minContainment=$minContainment")
-    // relaxed candidate threshold: the final filter accepts the
-    // 6-dp-ROUNDED containment ≥ t, so a pair at true value t − 5e-7
-    // can pass — prefix length and size pruning must not lose it
-    val tEff = minContainment - 1e-6
-    val groups = tokenSetGroups(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // tiny vocabularies always route dense (sharded past
-    // denseCoreShardSize) — see the prefixFilterJaccardPairs dispatch
-    val nGroups = groups.count()
-    val vocab = smallUniverse(groups)
-    // (__ga < __gb, containment_a, containment_b) at set grain, with
-    // containment_a belonging to the LOWER group id
-    val gp = vocab match {
-      case Some(v) =>
-        bitmaskContainmentSetPairs(groups, v, minContainment, nGroups)
-      case None => prefixContainmentSetPairs(groups, minContainment, tEff)
-    }
-    // expand to doc pairs; member ids don't follow group-id order, so
-    // the two containments swap when the pair renormalizes
-    val ma = groups.select(col("__gid").as("__ga"),
-      col("__members").as("__mas"))
-    val mb = groups.select(col("__gid").as("__gb"),
-      col("__members").as("__mbs"))
-    val cross = gp.join(ma, "__ga").join(mb, "__gb")
-      .select(col("containment_a").as("__ca"),
-        col("containment_b").as("__cb"),
-        explode(col("__mas")).as("__x"), col("__mbs"))
-      .select(col("__ca"), col("__cb"), col("__x"),
-        explode(col("__mbs")).as("__y"))
-      .select(least(col("__x"), col("__y")).as("id_a"),
-        greatest(col("__x"), col("__y")).as("id_b"),
-        when(col("__x") < col("__y"), col("__ca")).otherwise(col("__cb"))
-          .as("containment_a"),
-        when(col("__x") < col("__y"), col("__cb")).otherwise(col("__ca"))
-          .as("containment_b"))
-    val within = groups
-      .filter(col("__n") > 0 && size(col("__members")) > 1)
-      .select(explode(orderedPairs(col("__members"))).as("__pr"))
-      .select(col("__pr.a").as("id_a"), col("__pr.b").as("id_b"),
-        lit(1.0).as("containment_a"), lit(1.0).as("containment_b"))
-    val out = cross.unionByName(within)
-      // eager localCheckpoint (see prefixFilterJaccardPairs): result
-      // materializes before the group cache releases, and its storage
-      // is context-cleaned on GC instead of leaking per call
-      .localCheckpoint(true)
-    groups.unpersist()
-    out
-  }
-
-  /** Dense all-pairs containment over bitmask-encoded groups — the
-    * [[bitmaskJaccardSetPairs]] shape for the asymmetric measure
-    * (including the [[broadcastShards]] scale-out past
-    * [[denseCoreShardSize]] groups). No size prune in the loop
-    * condition: with t ≤ 1 the shorter side's containment can always
-    * qualify (if nb < t·na then na ≥ nb ≥ t·nb — the symmetric prune
-    * is vacuous for OR-of-directions), and the popcount math is the
-    * cheap part anyway. */
-  private def bitmaskContainmentSetPairs(groups: DataFrame,
-                                         vocab: Array[Long],
-                                         minContainment: Double,
-                                         nGroups: Long)
-      : DataFrame = {
-    // empty sets excluded — same rationale as bitmaskJaccardSetPairs
-    val masked = groups.filter(col("__n") > 0)
-      .select(col("__gid"),
-        col("__n").cast("double").as("__nn"),
-        maskOf(col("__tok"), vocab).as("__mask"))
-    val par = groups.sparkSession.sparkContext.defaultParallelism
-    val a = masked.toDF("__ga", "__na", "__ma").repartition(par)
-    val shards = broadcastShards(
-      masked, nGroups, denseCoreShardSize(groups))
-    shards.map { sh =>
-      val b = broadcast(sh.toDF("__gb", "__nb", "__mb"))
-      a.join(b, col("__ga") < col("__gb"))
-        .withColumn("__i",
-          bit_count(col("__ma").bitwiseAND(col("__mb"))).cast("double"))
-        .withColumn("containment_a", round(col("__i") / col("__na"), 6))
-        .withColumn("containment_b", round(col("__i") / col("__nb"), 6))
-        .filter(col("containment_a") >= minContainment ||
-          col("containment_b") >= minContainment)
-        .select("__ga", "__gb", "containment_a", "containment_b")
-    }.reduce(_ unionByName _)
-  }
-
-  /** Asymmetric prefix-filter containment core over distinct-set
-    * groups — the general-vocabulary engine behind
-    * [[containmentPairsPrefix]] (probe-prefix × full-posting index;
-    * see that scaladoc for the bound). */
-  private def prefixContainmentSetPairs(groups: DataFrame,
-                                        minContainment: Double,
-                                        tEff: Double): DataFrame = {
-    val toks = groups.select(col("__gid"), col("__n"),
-      explode(col("__tok")).as("__t"))
-    val dfreq = toks.groupBy("__t").agg(count(lit(1)).as("__df"))
-    // rarity order (df asc, token asc) — the prefixFilterJaccardPairs
-    // total order; sorting is per-row inside the rebuilt array
-    val ranked = toks.join(dfreq, "__t")
-      .groupBy("__gid")
-      .agg(transform(sort_array(collect_list(
-        struct(col("__df"), col("__t")))), s => s.getField("__t"))
-        .as("__sorted"))
-    // prefix length |A| − ⌈t·|A|⌉ + 1 (1e-9 slack: an exactly-
-    // representable t·n must not ceil UP on float noise and shorten
-    // the prefix — the completeness bound's edge)
-    val pref = ranked.withColumn("__n", size(col("__sorted")))
-      .withColumn("__p", (col("__n") -
-        ceil(lit(tEff) * col("__n") - lit(1e-9)) + 1).cast("int"))
-      .select(col("__gid").as("__probe"), col("__n").as("__np"),
-        explode(slice(col("__sorted"), lit(1),
-          greatest(col("__p"), lit(0)))).as("__pt"))
-    // the index is the FULL token stream in principle, but a token in
-    // nobody's prefix can never seed a candidate — semi-joining the
-    // stream down to the distinct prefix vocabulary drops the bulk of
-    // every set's common tokens before the candidate shuffle (the
-    // prefix vocabulary is the corpus's rare tail by construction)
-    val prefVocab = pref.select(col("__pt").as("__t")).distinct()
-    val index = toks.join(prefVocab, Seq("__t"))
-      .select(col("__gid").as("__idx"), col("__n").as("__ni"),
-        col("__t"))
-    val cand = pref.join(index, col("__pt") === col("__t"))
-      .filter(col("__probe") =!= col("__idx") &&
-        // c_probe = i/np ≥ t needs i ≥ t·np and i ≤ min(np, ni),
-        // so the indexed side must be at least t·np tokens
-        col("__ni") + lit(1e-9) >= col("__np") * lit(tEff))
-      .select(least(col("__probe"), col("__idx")).as("__ga"),
-        greatest(col("__probe"), col("__idx")).as("__gb"))
-      .distinct()
-    val sa = groups.select(col("__gid").as("__ga"), col("__tok").as("__ta"))
-    val sb = groups.select(col("__gid").as("__gb"), col("__tok").as("__tb"))
-    cand.join(sa, Seq("__ga")).join(sb, Seq("__gb"))
-      // __tok sorted at construction (tokenSetGroups)
-      .withColumn("__i", graft.functions.native
-        .intersect_count_sorted(col("__ta"), col("__tb")).cast("int"))
-      .withColumn("containment_a",
-        round(col("__i").cast("double") / size(col("__ta")), 6))
-      .withColumn("containment_b",
-        round(col("__i").cast("double") / size(col("__tb")), 6))
-      .filter(col("containment_a") >= minContainment ||
-        col("containment_b") >= minContainment)
-      .select("__ga", "__gb", "containment_a", "containment_b")
+      .withColumn("__i", inter(col("__ta"), col("__tb")))
+      .select(blockCols.map(col) ++ Seq(col("id_a"), col("id_b")) ++
+        measure.scores(col("__i"), card(col("__ta")),
+          card(col("__tb"))): _*)
+      .filter(measure.keep)
   }
 
   // ------------------------------------------------------------------
@@ -1787,7 +1584,7 @@ object DedupOps {
     // of hash PAIRS equals distinctness of grams up to collisions, so
     // the per-doc distinct-gram set is taken over the pairs.
     // widened: the per-position double hash chain + per-doc distinct
-    // dominates a narrow scan (ScanWidthProbe: 1.17 → 0.75 s;
+    // dominates a narrow scan (1.17 → 0.75 s, OPTIMIZATION_r16.md §5;
     // Relational.widenNarrowScan — no-op on wide scans)
     val grams = graft.ops.Relational.widenNarrowScan(df)
       .select(col(idCol), TextOps.tokens(col(textCol)).as("__tok"))

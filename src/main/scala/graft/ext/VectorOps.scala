@@ -328,7 +328,7 @@ object VectorOps {
     * a blocking key (e.g. label, language, shard) whose cosine ≥
     * threshold — the verification-quality exact measure, viable when
     * blocks are small. Same cap policy as
-    * [[graft.ext.DedupOps.ngramJaccardPairs]]: blocks larger than
+    * [[graft.ext.DedupOps.blockedSetSimilarityPairs]]: blocks larger than
     * `maxBlockSize` are dropped (B²/2 pairs within a block — an
     * uncapped hot block is a cartesian bomb); oversized blocks belong
     * to the SRP-pruned [[cosineNearDupPairs]] path. Fully
@@ -341,7 +341,7 @@ object VectorOps {
     val base = corpus.select(
       (col(idCol) +: col(vecCol) +: blockCols.map(col)): _*)
     // persisted only when the salt is census-DERIVED (the derive
-    // collect + prune join double-read — the ngramJaccardPairs census
+    // collect + prune join double-read — the blockedSetSimilarityPairs census
     // note); with a pinned salt the census has one consumer and a
     // cache would be pure overhead.
     val blockCensusRaw = corpus.groupBy(blockCols.map(col): _*)

@@ -194,11 +194,11 @@ object MinKLong {
   * `k` triples per group per input partition (map-side combinable,
   * merge = two-pointer sorted merge capped at `k`), so a
   * compute-cheap byte-heavy pair stream — the quadratic verification
-  * tiers — is consumed ONCE, where both the rank window (sorts every
-  * pair of a hot key in one task) and the histogram-threshold
-  * two-pass form ([[graft.ops.Relational.topNPerKeyByValue]])
-  * re-generate the stream per pass. Exact under the same total
-  * order as `row_number() OVER (ORDER BY value DESC, idA, idB) <= k`
+  * tiers — is consumed ONCE, where the rank window sorts every pair
+  * of a hot key in one task and the histogram-threshold two-pass
+  * form it replaced re-generated the stream per pass. Exact under
+  * the same total order as
+  * `row_number() OVER (ORDER BY value DESC, idA, idB) <= k`
   * (values compared as the rounded doubles both engines carry).
   * Output: the group's top-k triples, best first. */
 final class TopKValuePairs(k: Int)

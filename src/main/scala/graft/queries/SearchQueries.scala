@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.SearchOps
+import graft.ext.DedupOps.SetMeasure
 
 /** Full-text retrieval battery: BM25 ranking and inverted-index
   * construction over the documents corpus ([[graft.ext.SearchOps]]
@@ -27,10 +28,10 @@ object SearchQueries {
                                d: String)
       : org.apache.spark.sql.DataFrame =
     containPairCache((s, d)) {
-      graft.ext.DedupOps.containmentPairsPrefix(
+      graft.ext.DedupOps.setSimilarityPairs(
         Tables.documents(s, d).filter(col("doc_id") % 8 === 1)
           .repartition(32),
-        "doc_id", "text", minContainment = 0.9)
+        "doc_id", "text", SetMeasure.Containment(0.9))
     }
 
   private val bigvocabContainCache =
@@ -41,7 +42,7 @@ object SearchQueries {
     * `doc_id % 7` inflate the corpus vocabulary past the 62-token
     * bitmask bound (the [[Text2Queries]] bigvocab scheme), so THIS
     * query pins the asymmetric PREFIX core of
-    * [[graft.ext.DedupOps.containmentPairsPrefix]] at the oracle
+    * [[graft.ext.DedupOps.setSimilarityPairs]] at the oracle
     * gate — `containment_pairs_prefix` itself rides the dense
     * bitmask core on the tiny-vocabulary driver corpus.
     *
@@ -62,8 +63,8 @@ object SearchQueries {
             t => concat(t, lit("_"),
               pmod(col("doc_id"), lit(7)).cast("string")))))
         .repartition(32)
-      graft.ext.DedupOps.containmentPairsPrefix(
-        docs, "doc_id", "text", minContainment = 0.9)
+      graft.ext.DedupOps.setSimilarityPairs(
+        docs, "doc_id", "text", SetMeasure.Containment(0.9))
     }
 
   /** Build-once postings store ([[FixtureStore.buildOnce]]): a
@@ -159,7 +160,7 @@ object SearchQueries {
 
     // Doc-in-doc detection: blocked exact token-set containment, both
     // directions, pairs >= 0.9 in either (the boilerplate-inclusion
-    // case Jaccard misses — DedupOps.containmentPairs scaladoc).
+    // case Jaccard misses — DedupOps.SetMeasure.Containment scaladoc).
     // Rows carry the block-cap coverage accounting (dropped_blocks /
     // dropped_docs), same no-silent-caps discipline as
     // ngram_jaccard_topk — see that query's comment.
@@ -172,8 +173,8 @@ object SearchQueries {
         // derived value feeds the tier AND its drop accounting
         val cap = graft.ext.DedupOps.workBudgetCap(docs,
           Seq("lang", "source"))
-        graft.ext.DedupOps.containmentPairs(docs, "doc_id", "text",
-            Seq("lang", "source"), minContainment = 0.9,
+        graft.ext.DedupOps.blockedSetSimilarityPairs(docs, "doc_id",
+            "text", Seq("lang", "source"), SetMeasure.Containment(0.9),
             maxBlockSize = cap)
           .crossJoin(broadcast(graft.ext.DedupOps.droppedBlockStats(
             docs, Seq("lang", "source"), maxBlockSize = cap)))
@@ -184,7 +185,7 @@ object SearchQueries {
       // the capq CTE re-derives the work-budget cap from the same
       // block census (floor(sqrt(2·320M / #blocks>1)), clamped to
       // [2, 10000] — IEEE sqrt is exact in both engines); blk
-      // mirrors containmentPairs' smallBlocks filter at that cap and
+      // mirrors blockedSetSimilarityPairs' smallBlocks filter at that cap and
       // o mirrors droppedBlockStats: a (lang, source) block growing
       // past the cap is dropped on BOTH sides and the drop is
       // counted in the output on both sides
@@ -223,7 +224,7 @@ object SearchQueries {
         |ORDER BY lang, id_a, id_b""".stripMargin)),
 
     // EXACT corpus-global containment via the asymmetric prefix
-    // filter (DedupOps.containmentPairsPrefix): no blocking keys, no
+    // filter (DedupOps.setSimilarityPairs): no blocking keys, no
     // block caps, no dropped data — the 100 TB completion of
     // containment_dedup, whose cap drops oversized blocks. Run on
     // the doc_id % 8 = 1 subset (the corpus's dup cluster makes the

@@ -112,7 +112,7 @@ object Surface2Queries {
     // for linkage (at 100 TB the vocabulary of a name-like column is
     // orders of magnitude smaller than the corpus; the block key —
     // here the noun token — bounds each comparison set like
-    // ngramJaccardPairs' blocks, and a maxBlockSize cap + HAVING
+    // blockedSetSimilarityPairs' blocks, and a maxBlockSize cap + HAVING
     // mirror is the documented escape hatch if a vocabulary ever
     // explodes). levenshtein is codegen'd on both engines;
     // pair_mult = cnt_a · cnt_b is the number of corpus-row pairs the

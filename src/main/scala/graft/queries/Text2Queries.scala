@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{DecontamOps, TextOps}
+import graft.ext.DedupOps.SetMeasure
 
 /** Second text-surface battery: benchmark decontamination, PII
   * redaction, and repetition-based quality metrics. Same oracle
@@ -68,10 +69,10 @@ object Text2Queries {
   private def prefixPairs(s: org.apache.spark.sql.SparkSession,
                           d: String): org.apache.spark.sql.DataFrame =
     prefixPairCache((s, d)) {
-      graft.ext.DedupOps.prefixFilterJaccardPairs(
+      graft.ext.DedupOps.setSimilarityPairs(
         Tables.documents(s, d).filter(col("doc_id") % 4 === 1)
           .repartition(32),
-        "doc_id", "text", threshold = 0.8)
+        "doc_id", "text", SetMeasure.Jaccard(0.8))
     }
 
   private val bigvocabPairCache =
@@ -105,14 +106,14 @@ object Text2Queries {
             t => concat(t, lit("_"),
               pmod(col("doc_id"), lit(7)).cast("string")))))
         .repartition(32)
-      graft.ext.DedupOps.prefixFilterJaccardPairs(
-        docs, "doc_id", "text", threshold = 0.8)
+      graft.ext.DedupOps.setSimilarityPairs(
+        docs, "doc_id", "text", SetMeasure.Jaccard(0.8))
     }
 
   val defs: Map[String, QueryDef] = Map(
 
     // EXACT threshold Jaccard pair join via prefix filtering
-    // (AllPairs/PPJoin — DedupOps.prefixFilterJaccardPairs): the
+    // (AllPairs/PPJoin — DedupOps.setSimilarityPairs): the
     // deterministic scale path for exact similarity joins, candidate
     // generation bounded by rare-token prefixes instead of blocking
     // keys or LSH probability. Run on the doc_id % 4 = 1 subset (the

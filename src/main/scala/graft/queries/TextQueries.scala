@@ -252,7 +252,7 @@ object TextQueries {
     // the 5 most similar pairs per lang. Every row carries the
     // block-cap coverage accounting (dropped_blocks / dropped_docs —
     // constant corpus-level columns, hash-gated like the data): the
-    // B²-guard cap in ngramJaccardPairs is deliberate, but its drop
+    // B²-guard cap in blockedSetSimilarityPairs is deliberate, but its drop
     // must be VISIBLE in output, not discoverable only in scaladoc
     // (no-silent-caps; the blk CTE + o CTE mirror both the cap and
     // the accounting on the oracle side).
@@ -263,8 +263,10 @@ object TextQueries {
         // see containment_dedup; shared by the tier and its
         // accounting so the drop bookkeeping stays consistent
         val cap = DedupOps.workBudgetCap(docs, Seq("lang", "source"))
-        val pairs = DedupOps.ngramJaccardPairs(docs,
-          "doc_id", "text", Seq("lang", "source"), maxBlockSize = cap)
+        // Jaccard(0): unthresholded — the top-k below ranks all pairs
+        val pairs = DedupOps.blockedSetSimilarityPairs(docs, "doc_id",
+          "text", Seq("lang", "source"), DedupOps.SetMeasure.Jaccard(0),
+          maxBlockSize = cap)
         // ONE-PASS bounded top-k aggregate (r17), not the window form
         // (sort spill: 678 s / ~15 GB at sf4) and not the histogram-
         // threshold two-pass form (which re-GENERATES the quadratic

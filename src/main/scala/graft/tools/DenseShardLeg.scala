@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** r14 leg (VERDICT r13 #4/#5): cross the dense-core broadcast-shard
   * knee with REAL data. The r13 spec proved sharded ≡ unsharded on a
   * synthetic 700-group frame; this leg runs
-  * [[graft.ext.DedupOps.prefixFilterJaccardPairs]] on a tiny-vocab
+  * [[graft.ext.DedupOps.setSimilarityPairs]] (Jaccard) on a tiny-vocab
   * corpus whose DISTINCT-SET group count genuinely exceeds
   * denseCoreMaxGroups (200k), so the production default actually
   * shards the broadcast side — and measures the same corpus forced
@@ -43,8 +43,8 @@ object DenseShardLeg {
         case None => spark.conf.unset("graft.dedup.denseCoreShardSize")
       }
       val t0 = System.nanoTime()
-      val n = graft.ext.DedupOps.prefixFilterJaccardPairs(
-        docs, "doc_id", "text", threshold).count()
+      val n = graft.ext.DedupOps.setSimilarityPairs(docs, "doc_id", "text",
+        graft.ext.DedupOps.SetMeasure.Jaccard(threshold)).count()
       println(f"[denseshard] $sfDir $label pairs=$n " +
         f"secs=${(System.nanoTime() - t0) / 1e9}%.1f")
     }

@@ -133,21 +133,16 @@ object PlanAudit {
     *    counter moved to the plan tree and started seeing subquery
     *    plans at all — the shape itself is unchanged since r6.
     *
-    *  - `ngram_jaccard_topk` (8 vs neardup 3): the r12 stream-scale
-    *    reshape (`Relational.topNPerKeyByValue` + salted
-    *    computeDensePairJoin). The plain rank window's partial
+    *  - `ngram_jaccard_topk` (5 vs neardup 3): the r17 one-pass
+    *    top-k (`TopKValuePairs` over the salted
+    *    computeDensePairJoin tier). The plain rank window's partial
     *    rank-limit SORTED every pair partition — 678 s and ~15 GB of
-    *    sort spill at sf4 for a 20-row answer; the two-pass
-    *    histogram form (value-count fold → per-key threshold →
-    *    survivor-only exact rank) plus the hot-block salt measured
-    *    97 s on the same leg. The exchange budget reads the trade
-    *    honestly: 2 pinned doc-grain pair-side exchanges (one per
-    *    pass — recompute, not cache, is the compute-density
-    *    posture), the (lang, jaccard) histogram fold + its
-    *    histogram-grain window, the survivor bucketed-rank pair of
-    *    windows, and the r9 accounting fold. Every added exchange
-    *    moves histogram-/survivor-/doc-grain rows; the 500M-row pair
-    *    stream itself never shuffles and never sorts.
+    *    sort spill at sf4 for a 20-row answer. The five exchanges:
+    *    the block census (reused by the accounting fold), the pinned
+    *    doc-grain pair side, the per-lang top-k fold, the r9
+    *    accounting fold, and the output sort. Every one moves
+    *    census-/doc-/top-k-grain rows; the 500M-row pair stream
+    *    itself never shuffles and never sorts.
     *
     *  - `containment_dedup` (4 vs neardup 3): the same r12
     *    computeDensePairJoin pin as ngram_jaccard_topk (its r9

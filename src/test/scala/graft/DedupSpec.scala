@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.DedupOps
+import graft.ext.DedupOps.SetMeasure.{Containment, Jaccard}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -135,8 +136,8 @@ class DedupSpec extends SparkSpec {
               size(array_intersect($"a.ts", $"b.ts"))), 6).as("j"))
         .filter($"j" >= t)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val got = DedupOps.prefixFilterJaccardPairs(
-          corpus, "doc_id", "text", threshold = t)
+      val got = DedupOps.setSimilarityPairs(
+          corpus, "doc_id", "text", Jaccard(t))
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(got == exact,
         s"t=$t: got=${got.size} exact=${exact.size}; " +
@@ -148,8 +149,8 @@ class DedupSpec extends SparkSpec {
     // threshold must let verification see it
     val edge = Seq(
       (1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
-    val hit = DedupOps.prefixFilterJaccardPairs(
-        edge, "doc_id", "text", threshold = 0.666667)
+    val hit = DedupOps.setSimilarityPairs(
+        edge, "doc_id", "text", Jaccard(0.666667))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(hit == Set((1L, 2L)))
   }
@@ -172,16 +173,16 @@ class DedupSpec extends SparkSpec {
     val allPairs = hotPairs + ((100L, 101L))
     // (a) cap present but NOT binding (every posting ≤ 100): the
     // exactness contract holds — identical to the uncapped run
-    val slack = DedupOps.prefixFilterJaccardPairs(
-        corpus, "doc_id", "text", t, maxBucketSize = 100)
+    val slack = DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", Jaccard(t), maxBucketSize = 100)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(slack == allPairs, s"slack cap lost pairs: ${allPairs -- slack}")
     // (b) cap binds on h1/h2 (postings of 8 > 4): every hot pair's
     // shared prefix tokens are ALL over the cap → dropped; the rare
     // pair survives through its size-2 postings — one surviving
     // shared rare token is enough
-    val capped = DedupOps.prefixFilterJaccardPairs(
-        corpus, "doc_id", "text", t, maxBucketSize = 4)
+    val capped = DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", Jaccard(t), maxBucketSize = 4)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped == Set((100L, 101L)),
       s"capped run: expected only the rare pair, got $capped")
@@ -219,8 +220,8 @@ class DedupSpec extends SparkSpec {
         .filter($"ca" >= t || $"cb" >= t)
         .select("id_a", "id_b", "ca", "cb")
         .as[(Long, Long, Double, Double)].collect().toSet
-      val got = DedupOps.containmentPairsPrefix(
-          corpus, "doc_id", "text", minContainment = t)
+      val got = DedupOps.setSimilarityPairs(
+          corpus, "doc_id", "text", Containment(t))
         .select("id_a", "id_b", "containment_a", "containment_b")
         .as[(Long, Long, Double, Double)].collect().toSet
       assert(got == exact,
@@ -235,8 +236,8 @@ class DedupSpec extends SparkSpec {
     // must let verification see the round-up
     val edge = Seq(
       (1L, "a b c"), (2L, "a b d e f")).toDF("doc_id", "text")
-    val hit = DedupOps.containmentPairsPrefix(
-        edge, "doc_id", "text", minContainment = 0.666667)
+    val hit = DedupOps.setSimilarityPairs(
+        edge, "doc_id", "text", Containment(0.666667))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(hit == Set((1L, 2L)))
   }
@@ -253,16 +254,16 @@ class DedupSpec extends SparkSpec {
         "theta iota kappa"),
       (3L, "en", "web", "unrelated totally different words entirely")
     ).toDF("doc_id", "lang", "source", "text")
-    val capped = DedupOps.containmentPairs(d, "doc_id", "text",
-        Seq("lang", "source"), minContainment = 0.9, maxBlockSize = 2)
+    val capped = DedupOps.blockedSetSimilarityPairs(d, "doc_id", "text",
+        Seq("lang", "source"), Containment(0.9), maxBlockSize = 2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped.isEmpty)
     val stats = DedupOps.droppedBlockStats(d, Seq("lang", "source"),
         maxBlockSize = 2)
       .as[(Long, Long)].head()
     assert(stats == ((1L, 3L))) // the drop is accounted, not silent
-    val exact = DedupOps.containmentPairsPrefix(d, "doc_id", "text",
-        minContainment = 0.9)
+    val exact = DedupOps.setSimilarityPairs(
+        d, "doc_id", "text", Containment(0.9))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact == Set((1L, 2L))) // containment_a = 6/6 = 1.0
   }
@@ -341,8 +342,9 @@ class DedupSpec extends SparkSpec {
     val blocked = corpus(degenerate = true).select($"doc_id", $"text",
       when($"doc_id" % 2 === 0, lit("xx")).otherwise(
         concat(lit("lang_"), pmod($"doc_id", lit(200)))).as("lang"))
-    val (nPairs, tNg) = timed(DedupOps.ngramJaccardPairs(
-      blocked, "doc_id", "text", Seq("lang"), maxBlockSize = 100).count())
+    val (nPairs, tNg) = timed(DedupOps.blockedSetSimilarityPairs(
+      blocked, "doc_id", "text", Seq("lang"), Jaccard(0),
+      maxBlockSize = 100).count())
     // odd doc_ids hit only odd residues mod 200 → 100 surviving blocks
     // of 50 docs → exactly 100 × C(50,2) = 122500 within-block pairs;
     // the hot block's C(5000,2) ≈ 12.5M pairs must contribute NOTHING
@@ -461,14 +463,14 @@ class DedupSpec extends SparkSpec {
     // one hot 5-doc block over the cap → zero pairs, not C(5,2)
     val hot = docs.withColumn("lang", lit("en"))
       .withColumn("source", lit("s"))
-    assert(DedupOps.ngramJaccardPairs(hot, "doc_id", "text",
-      Seq("lang", "source"), maxBlockSize = 4).count() == 0)
+    assert(DedupOps.blockedSetSimilarityPairs(hot, "doc_id", "text",
+      Seq("lang", "source"), Jaccard(0), maxBlockSize = 4).count() == 0)
     // mixed: the small block still pairs, the oversized one is dropped
     val mixed = docs.withColumn("lang",
         when($"doc_id" <= 2, "en").otherwise("de"))
       .withColumn("source", lit("s"))
-    val out = DedupOps.ngramJaccardPairs(mixed, "doc_id", "text",
-      Seq("lang", "source"), maxBlockSize = 2)
+    val out = DedupOps.blockedSetSimilarityPairs(mixed, "doc_id", "text",
+      Seq("lang", "source"), Jaccard(0), maxBlockSize = 2)
     assert(out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
       == Set((1L, 2L)))
   }
@@ -476,12 +478,19 @@ class DedupSpec extends SparkSpec {
   test("ngramJaccardPairs computes exact set jaccard within blocks") {
     val blocked = docs.withColumn("lang", lit("en"))
       .withColumn("source", lit("s"))
-    val out = DedupOps.ngramJaccardPairs(blocked, "doc_id", "text",
-      Seq("lang", "source"))
+    val out = DedupOps.blockedSetSimilarityPairs(blocked, "doc_id",
+      "text", Seq("lang", "source"), Jaccard(0))
     assert(out.count() == 10) // C(5,2)
     val j14 = out.filter($"id_a" === 1 && $"id_b" === 4)
       .select("jaccard").as[Double].head()
     assert(j14 == 1.0)
+    // a pair of empty-token docs scores a null 0/0 jaccard (the
+    // oracle's value) instead of a DIVIDE_BY_ZERO failure under ANSI
+    val empty = Seq((7L, ""), (8L, "   ")).toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+    assert(DedupOps.blockedSetSimilarityPairs(empty, "doc_id", "text",
+        Seq("lang", "source"), Jaccard(0))
+      .select("jaccard").as[Option[Double]].collect().toSeq == Seq(None))
   }
 
   test("incrementalExactDedup: first-arrival-wins across batches, " +
@@ -528,9 +537,10 @@ class DedupSpec extends SparkSpec {
     // ≤62 distinct tokens → the default run takes the dense bitmask
     // core; a non-default maxBucketSize that never binds forces the
     // prefix core on the SAME corpus (dense ignores the cap — see
-    // scaladoc). Corpus includes exact-dup groups (within-group 1.0
-    // expansion), an empty doc (must stay absent), and borderline
-    // sizes for the tEff filter.
+    // scaladoc), for both measures. Corpus includes exact-dup groups
+    // (within-group 1.0 expansion), an empty doc (must stay absent),
+    // borderline sizes for the tEff filter, and a short doc contained
+    // in the long ones (containment's one-sided prefix probe).
     val corpus = (
       (1 to 6).map(i => (i.toLong,
         "alpha beta gamma delta epsilon zeta eta theta " +
@@ -538,26 +548,34 @@ class DedupSpec extends SparkSpec {
       Seq(
         (20L, "alpha beta gamma delta epsilon zeta eta theta iota"),
         (21L, "mu nu xi"), (22L, "mu nu xi"), (23L, "mu nu xi"),
+        (24L, "alpha beta gamma"),
         (30L, "   "), (31L, ""))
     ).toDF("doc_id", "text")
-    for (t <- Seq(0.5, 0.8, 1.0)) {
-      val dense = DedupOps.prefixFilterJaccardPairs(
-          corpus, "doc_id", "text", threshold = t)
-        .as[(Long, Long, Double)].collect().toSet
-      val prefix = DedupOps.prefixFilterJaccardPairs(
-          corpus, "doc_id", "text", threshold = t,
-          maxBucketSize = Int.MaxValue - 1)
-        .as[(Long, Long, Double)].collect().toSet
+    for (measure <- Seq[Double => DedupOps.SetMeasure](
+           Jaccard(_), Containment(_));
+         t <- Seq(0.5, 0.8, 1.0)) {
+      val m = measure(t)
+      def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          (2 until r.size).map(r.getDouble))).toSet
+      val dense = pairs(DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", m))
+      val prefix = pairs(DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", m, maxBucketSize = Int.MaxValue - 1))
       assert(dense == prefix,
-        s"t=$t: dense-only=${(dense -- prefix).take(5)} " +
+        s"$m: dense-only=${(dense -- prefix).take(5)} " +
           s"prefix-only=${(prefix -- dense).take(5)}")
       // identical-set triple expands to its 3 within-group pairs at 1.0
+      val ones = m.names.map(_ => 1.0)
       assert(dense.filter(p => p._1 >= 21L && p._2 <= 23L) ==
-        Set((21L, 22L, 1.0), (21L, 23L, 1.0), (22L, 23L, 1.0)), dense)
-      // empty/blank docs never pair (0/0 jaccard was null in the
+        Set((21L, 22L, ones), (21L, 23L, ones), (22L, 23L, ones)), dense)
+      // empty/blank docs never pair (0/0 scores were null in the
       // all-arrays form; the collapse must not resurrect them)
       assert(!dense.exists(p => p._1 >= 30L || p._2 >= 30L), dense)
     }
+    // the contained doc is where the measures part ways
+    assert(DedupOps.setSimilarityPairs(corpus, "doc_id", "text",
+      Containment(1.0)).filter($"id_b" === 24L).count() == 7)
   }
 
   test("dense bitmask cores SHARD past the group knee — tiny-vocab " +
@@ -575,11 +593,11 @@ class DedupSpec extends SparkSpec {
       (i.toLong, toks.indices.filter(b => (pat & (1 << b)) != 0)
         .map(toks).mkString(" "))
     }.toDF("doc_id", "text")
-    def runJ() = DedupOps.prefixFilterJaccardPairs(
-        corpus, "doc_id", "text", threshold = 0.8)
+    def runJ() = DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", Jaccard(0.8))
       .as[(Long, Long, Double)].collect().toSet
-    def runC() = DedupOps.containmentPairsPrefix(
-        corpus, "doc_id", "text", minContainment = 0.9)
+    def runC() = DedupOps.setSimilarityPairs(
+        corpus, "doc_id", "text", Containment(0.9))
       .select("id_a", "id_b", "containment_a", "containment_b")
       .as[(Long, Long, Double, Double)].collect().toSet
     val (oneJ, oneC) = (runJ(), runC()) // default: single broadcast
@@ -617,8 +635,8 @@ class DedupSpec extends SparkSpec {
           round($"__i" / size($"b.ts"), 6).as("cb"))
         .filter($"ca" >= t || $"cb" >= t)
         .as[(Long, Long, Double, Double)].collect().toSet
-      val got = DedupOps.containmentPairsPrefix(
-          corpus, "doc_id", "text", minContainment = t)
+      val got = DedupOps.setSimilarityPairs(
+          corpus, "doc_id", "text", Containment(t))
         .select("id_a", "id_b", "containment_a", "containment_b")
         .as[(Long, Long, Double, Double)].collect().toSet
       assert(got == exact,

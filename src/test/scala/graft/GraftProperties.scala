@@ -260,8 +260,9 @@ object GraftProperties extends Properties("graft") {
       val nonEmpty = rows.filter(_._2.trim.nonEmpty)
       val df = nonEmpty.map { case (id, t) => (id, t, "x", "y") }
         .toDF("doc_id", "text", "lang", "source")
-      val got = graft.ext.DedupOps.containmentPairs(df, "doc_id",
-          "text", Seq("lang", "source"), thr)
+      val got = graft.ext.DedupOps.blockedSetSimilarityPairs(df,
+          "doc_id", "text", Seq("lang", "source"),
+          graft.ext.DedupOps.SetMeasure.Containment(thr))
         .select("id_a", "id_b", "containment_a", "containment_b")
         .as[(Long, Long, Double, Double)].collect()
         .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
@@ -325,8 +326,8 @@ object GraftProperties extends Properties("graft") {
               size(array_intersect($"a.ts", $"b.ts"))), 6).as("j"))
         .filter($"j" >= t)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val got = graft.ext.DedupOps.prefixFilterJaccardPairs(
-          df, "doc_id", "text", threshold = t)
+      val got = graft.ext.DedupOps.setSimilarityPairs(
+          df, "doc_id", "text", graft.ext.DedupOps.SetMeasure.Jaccard(t))
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       got == want
     }
@@ -360,8 +361,8 @@ object GraftProperties extends Properties("graft") {
               size(array_intersect($"a.ts", $"b.ts"))), 6).as("j"))
         .filter($"j" >= t)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val got = graft.ext.DedupOps.prefixFilterJaccardPairs(
-          df, "doc_id", "text", threshold = t)
+      val got = graft.ext.DedupOps.setSimilarityPairs(
+          df, "doc_id", "text", graft.ext.DedupOps.SetMeasure.Jaccard(t))
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       got == want
     }

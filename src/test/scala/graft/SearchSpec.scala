@@ -5,7 +5,7 @@ import graft.ext.{DedupOps, SearchOps, SketchOps}
 
 /** Hand-computable edge cases for the retrieval battery
   * ([[graft.ext.SearchOps]]), containment dedup
-  * ([[graft.ext.DedupOps.containmentPairs]]), and verified CMS heavy
+  * ([[graft.ext.DedupOps.blockedSetSimilarityPairs]]), and verified CMS heavy
   * hitters ([[graft.ext.SketchOps]]) — the corpus-scale behavior is
   * oracle-checked by the registry queries; these pin the semantics on
   * crafted inputs. */
@@ -82,8 +82,8 @@ class SearchSpec extends SparkSpec {
         "tokens one two three four five six seven eight", "en", "web"),
       (3L, "nothing shared here at all", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
-    val out = DedupOps.containmentPairs(d, "doc_id", "text",
-      Seq("lang", "source"), minContainment = 0.9)
+    val out = DedupOps.blockedSetSimilarityPairs(d, "doc_id", "text",
+      Seq("lang", "source"), DedupOps.SetMeasure.Containment(0.9))
       .select("id_a", "id_b", "containment_a", "containment_b")
       .collect()
     assert(out.length == 1)
@@ -99,8 +99,8 @@ class SearchSpec extends SparkSpec {
       (1L, "a b c d e f g h", "en", "web"),
       (2L, "a b c d x y z w", "en", "web"))  // 4/8 overlap each way
       .toDF("doc_id", "text", "lang", "source")
-    assert(DedupOps.containmentPairs(d, "doc_id", "text",
-      Seq("lang", "source"), minContainment = 0.9).isEmpty)
+    assert(DedupOps.blockedSetSimilarityPairs(d, "doc_id", "text",
+      Seq("lang", "source"), DedupOps.SetMeasure.Containment(0.9)).isEmpty)
   }
 
   test("heavyHittersVerified: exact counts with both CMS bounds " +
